@@ -16,6 +16,8 @@ parquet scan. Without ``--input`` the synthetic generator is used.
 
 Stages (each manifest-checkpointed; a re-run with the same run id skips
 committed stages): points -> payloads -> compressed blobs -> retention sweep.
+Points and payloads are the two frames of ``pipeline.run_tier``, the same
+plan the library and the benchmark run.
 """
 
 from __future__ import annotations
@@ -92,20 +94,17 @@ def main(argv=None):
         watermark = pages.agg(F.max("warc_ts")).first()[0]
     wm = str(watermark)
 
-    prepared = pipeline.prepare(pages, reg, tier)
+    pts, pay = pipeline.run_tier(pages, reg, args.tier, exact=args.exact)
 
     def stage_points():
-        pts = pipeline.shape_points(
-            pipeline.rollup_points(prepared, tier, exact=args.exact), reg, tier
-        ).withColumn("snapshot_id", F.lit(catalog.last_snapshot_id(f"points_{tier.name}") or 0) + 1)
+        snap_id = (catalog.last_snapshot_id(f"points_{tier.name}") or 0) + 1
         snap = catalog.write(
-            f"points_{tier.name}", pts, mode="append", partition_by=["bucket"],
-            watermark=wm, count_rows=True,
+            f"points_{tier.name}", pts.withColumn("snapshot_id", F.lit(snap_id)),
+            mode="append", partition_by=["bucket"], watermark=wm, count_rows=True,
         )
         return snap, None
 
     def stage_payloads():
-        pay = pipeline.tier_payloads(prepared, tier)
         return catalog.write(f"payloads_{tier.name}", pay, watermark=wm), None
 
     def stage_compress():

@@ -27,11 +27,12 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from timeseries_harmonizer_spark.config import N_BUCKETS  # noqa: E402
 from timeseries_harmonizer_spark.session import get_spark  # noqa: E402

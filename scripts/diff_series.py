@@ -16,13 +16,14 @@ row-level report of missing / extra / mismatching windows.
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import oracle  # noqa: E402
 from timeseries_harmonizer_spark.config import TIERS  # noqa: E402

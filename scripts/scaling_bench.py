@@ -24,6 +24,8 @@ from concurrent.futures import ProcessPoolExecutor
 
 import os as _os
 
+ROOT = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
+
 # Default config (~16M raw rows) is the round-2..5 continuity config.
 # SCALE_N_URLS/SCALE_PPU grow the job to amortize the ~15 s per-JOB fixed
 # cost (JIT, planning, stage scheduling) that a short run cannot hide:
@@ -55,7 +57,7 @@ def effective_cores(workers: int, n: int = 30_000_000) -> float:
 
 JOB = r"""
 import json, os, sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.getcwd())  # run() starts this job in the repo root
 from timeseries_harmonizer_spark.session import get_spark
 from timeseries_harmonizer_spark.plans import pipeline
 from timeseries_harmonizer_spark.sources.webpages import web_pages, registry
@@ -108,7 +110,7 @@ print("RESULT " + json.dumps({"cores": cores, "points": n, "sec": round(best,2),
 def run(cores: int) -> dict:
     out = subprocess.run(
         [sys.executable, "-c", JOB, str(cores), str(N_URLS), str(PPU), str(TIMED_REPS)],
-        capture_output=True, text=True, timeout=3300, cwd="/root/repo",
+        capture_output=True, text=True, timeout=3300, cwd=ROOT,
     )
     lines = [l for l in out.stdout.splitlines() if l.startswith("RESULT ")]
     if not lines:

@@ -5,6 +5,7 @@ max abs diff for floats)."""
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -12,7 +13,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from timeseries_harmonizer_spark.session import get_spark  # noqa: E402

@@ -310,6 +310,10 @@ def test_manifest_data_skipping(spark, tmp_path):
     )
     pd.testing.assert_frame_equal(got, full)
     assert len(got) == 24
+    # a file whose min equals the (naive, session-UTC) upper bound is kept:
+    # tz-aware parquet stats and naive bounds share one encoding
+    edge = pd.Timestamp("2024-02-01")
+    assert len(cat.read(spark, "t", where=("start", edge, edge)).inputFiles()) == 1
     # a range touching nothing prunes everything -> empty-read error
     with pytest.raises(FileNotFoundError):
         cat.read(spark, "t", where=("start", pd.Timestamp("2030-01-01"),

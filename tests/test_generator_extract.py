@@ -1,5 +1,8 @@
 """Generator determinism + extract stage per-row invariant."""
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from timeseries_harmonizer_spark.functions.extract import extract_text
@@ -42,3 +45,15 @@ def test_extract_is_pure_function_of_bytes(pages):
     ext1 = pages.withColumn("ext", extract_text(F.col("html"))).select("url", "warc_ts", "ingest_pos", "ext")
     ext2 = pages.withColumn("ext", extract_text(F.col("html"))).select("url", "warc_ts", "ingest_pos", "ext")
     assert ext1.exceptAll(ext2).count() == 0
+
+
+@pytest.mark.parametrize("body", ["a\rb", "a\nb", "a\u2028b", "ab"])
+def test_extract_line_terminators_match_python_re(spark, body):
+    """Only '\n' ends a line for the body match, as in Python ``re``:
+    '\r' and U+2028 stay inside <p>...</p>."""
+    html = f"<html><body><p>{body}</p></body></html>"
+    m = re.search(r"<p>(.*?)</p>", html)
+    expected = m.group(1) if m else None
+    df = spark.createDataFrame([(bytearray(html.encode("utf-8")),)], "html binary")
+    got = df.select(extract_text(F.col("html")).alias("t")).first()["t"]
+    assert got == expected

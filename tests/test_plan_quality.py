@@ -42,12 +42,12 @@ def test_rollup_native_stays_codegen(spark, pages, reg):
     """The closed-form rollup path must contain no Python (BatchEvalPython /
     ArrowEvalPython / FlatMapGroupsInPandas) nodes."""
     from timeseries_harmonizer_spark.config import TIERS
-    from timeseries_harmonizer_spark.operators.rollup import rollup_native_sum
+    from timeseries_harmonizer_spark.operators.rollup import rollup_native_sum_avg
     from timeseries_harmonizer_spark.operators.sessionize import sessionize
 
-    df = pages.where(F.col("value").isNotNull())
+    df = pages.where(F.col("value").isNotNull()).withColumn("agg_func", F.lit("SUM"))
     df = sessionize(df, gap_seconds=7200)
-    q = rollup_native_sum(df, freq_seconds=3600)
+    q = rollup_native_sum_avg(df, freq_seconds=3600)
     plan = _plan(q)
     for bad in ("BatchEvalPython", "ArrowEvalPython", "FlatMapGroupsInPandas"):
         assert bad not in plan, f"{bad} found in native rollup plan"

@@ -46,7 +46,7 @@ def test_hot_series_chunked(spark):
     still matches the closed-form native path post-round."""
     import pandas as pd
     import numpy as np
-    from timeseries_harmonizer_spark.operators.rollup import rollup_native_avg
+    from timeseries_harmonizer_spark.operators.rollup import rollup_native_sum_avg
 
     n = 50_000
     rng = np.random.default_rng(11)
@@ -62,7 +62,9 @@ def test_hot_series_chunked(spark):
         .reset_index(drop=True)
     )
     native = (
-        rollup_native_avg(df, freq_seconds=3600, session_col=None)
+        rollup_native_sum_avg(
+            df.withColumn("agg_func", F.lit("AVG")), freq_seconds=3600, session_col=None
+        )
         .toPandas()
         .sort_values("start")
         .reset_index(drop=True)

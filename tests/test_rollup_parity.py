@@ -126,40 +126,33 @@ def test_twa_matches_numpy_trapezoid(spark):
     np.testing.assert_allclose(r["value"].to_numpy(), [1800.0, 5400.0])
 
 
-def test_sum_avg_combined_equals_separate(spark, pages, reg):
-    """r6: the single-pass SUM+AVG rollup must equal the separate
-    operators bit-for-bit on the same prepared frame (per-branch rows and
-    float operation order are identical by construction)."""
+@pytest.mark.parametrize("tier_name", ["1m", "1h", "1d"])
+def test_sum_avg_native_matches_replay(spark, pages, reg, tier_name):
+    """The single-pass SUM/AVG closed form vs the pandas 1s-grid replay
+    (rollup_exact) on the same prepared frame: identical (url, start)
+    windows and unrounded values within float-reordering noise."""
     from timeseries_harmonizer_spark.operators.rollup import (
-        rollup_native_avg,
-        rollup_native_sum,
+        rollup_exact,
         rollup_native_sum_avg,
     )
 
-    tier = TIERS["1h"]
-    prepared = pipeline.prepare(pages, reg, tier)
-    combined = (
-        rollup_native_sum_avg(
-            prepared.where(F.col("agg_func").isin("SUM", "AVG")),
-            freq_seconds=tier.seconds, session_col="session_id",
-        )
-        .toPandas().sort_values(["url", "start"]).reset_index(drop=True)
+    tier = TIERS[tier_name]
+    sum_avg = pipeline.prepare(pages, reg, tier).where(
+        F.col("agg_func").isin("SUM", "AVG")
     )
-    sums = rollup_native_sum(
-        prepared.where(F.col("agg_func") == "SUM"),
-        freq_seconds=tier.seconds, session_col="session_id",
+
+    def collect(df):
+        return df.toPandas().sort_values(["url", "start"]).reset_index(drop=True)
+
+    native = collect(
+        rollup_native_sum_avg(sum_avg, freq_seconds=tier.seconds, session_col="session_id")
     )
-    avgs = rollup_native_avg(
-        prepared.where(F.col("agg_func") == "AVG"),
-        freq_seconds=tier.seconds, session_col="session_id",
+    replay = collect(
+        rollup_exact(sum_avg, freq_seconds=tier.seconds, session_col="session_id")
     )
-    separate = (
-        sums.unionByName(avgs)
-        .toPandas().sort_values(["url", "start"]).reset_index(drop=True)
-    )
-    assert len(combined) == len(separate)
-    assert (combined["url"].to_numpy() == separate["url"].to_numpy()).all()
-    assert (combined["start"].to_numpy() == separate["start"].to_numpy()).all()
-    np.testing.assert_array_equal(
-        combined["value"].to_numpy(), separate["value"].to_numpy()
+    assert len(native) == len(replay) > 0
+    assert (native["url"].to_numpy() == replay["url"].to_numpy()).all()
+    assert (native["start"].to_numpy() == replay["start"].to_numpy()).all()
+    np.testing.assert_allclose(
+        native["value"].to_numpy(), replay["value"].to_numpy(), rtol=0, atol=1e-9
     )

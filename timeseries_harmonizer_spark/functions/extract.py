@@ -24,7 +24,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-_EXTRACT_RE = r"<p>(.*?)</p>"
+# (?d) = Java UNIX_LINES: only '\n' ends a line for '.', as in Python ``re``
+# (the oracle's engine); without it '.' also stops at '\r' and U+2028.
+_EXTRACT_RE = r"(?d)<p>(.*?)</p>"
 
 
 def extract_text(html) -> F.Column:
@@ -34,10 +36,6 @@ def extract_text(html) -> F.Column:
     decoded = F.decode(html, "UTF-8")
     m = F.regexp_substr(decoded, F.lit(_EXTRACT_RE))
     return F.substring(m, 4, F.length(m) - 7)
-
-
-def with_extracted_text(df: DataFrame, html_col: str = "html", out_col: str = "extracted_text") -> DataFrame:
-    return df.withColumn(out_col, extract_text(F.col(html_col)))
 
 
 def typed_value_extract(

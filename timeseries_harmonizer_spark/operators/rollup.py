@@ -8,17 +8,23 @@ Two implementations of the reference's ``harmonize_irregular_data``
    semantics bit-for-bit (the parity path). Group size is bounded by
    sessionization, so the 1s materialization never exceeds one session span.
 
-2. ``rollup_native`` — the scale path: a closed-form, pure-DataFrame
+2. ``rollup_native_sum_avg`` — the scale path: a closed-form, pure-DataFrame
    derivation. Key observation: after placing each point at
    ``floor(ts, 1s)`` and linearly interpolating, the per-second increment is
    *constant within each inter-point segment* (slope = dv/ds). So the
    tier-window sum/count/mean are exact segment-overlap arithmetic — no 1s
    grid is ever materialized. Each segment explodes into only the tier
    windows it overlaps (len/F + 1 rows), then a single groupBy(key, window)
-   merges. Mathematically identical to the replay; floating-point addition
-   order differs, so parity tests compare post-round(5).
+   merges. SUM and AVG series share this one knots pass and one merge
+   aggregate. Mathematically identical to the replay; floating-point
+   addition order differs, so parity tests compare post-round(5).
+   ``rollup_exact_chunked`` is the replay with bounded Arrow groups (the
+   pipeline's exact path).
 
-LAST (R3) is fully native: tumbling max_by + dense window grid + LOCF.
+LAST (R3) is fully native: a tumbling max_by per window, then each observed
+window claims every slot up to the next observed one, filled with the
+running last non-null value (LOCF), in one window pass and a chunk-bounded
+explode (``rollup_native_last``).
 
 Also here: R6 downsample (tier -> coarser tier), R7 upsample (ffill +
 sum-splitting), R8 dense reindex, and the north-star continuous aggregates
@@ -118,104 +124,6 @@ def _knots(df, key, ts_col, value, session_col):
     )
 
 
-def rollup_native_sum(
-    df: DataFrame,
-    key: str = "url",
-    ts_col: str = "warc_ts",
-    value: str = "value",
-    freq_seconds: int = 3600,
-    session_col: str | None = "session_id",
-    drop_neg: bool = True,
-) -> DataFrame:
-    """R1 closed form. Per segment (s1,v1)->(s2,v2): every second in
-    (s1, s2] carries increment slope=(v2-v1)/(s2-s1); negative-slope seconds
-    are *removed* (reference keeps only diffs >= 0), making their windows
-    incomplete. Window emitted iff kept-second count == freq."""
-    from timeseries_harmonizer_spark.operators.cleaning import drop_negative_diffs
-
-    if drop_neg:
-        keys = [key] + ([session_col] if session_col else [])
-        df = drop_negative_diffs(df.where(F.col(value).isNotNull()), keys, ts_col, value)
-    seg = _knots(df, key, ts_col, value, session_col).where(F.col("__s2").isNotNull())
-    Fs = freq_seconds
-    slope = (F.col("__v2") - F.col("__v")) / (F.col("__s2") - F.col("__s"))
-    # seconds covered by this segment: [s1+1, s2]
-    a = F.col("__s") + 1
-    b = F.col("__s2")
-    win0 = F.floor(a / Fs) * Fs
-    win1 = F.floor(b / Fs) * Fs
-    seg = seg.select(
-        "__k",
-        slope.alias("__slope"),
-        a.alias("__a"),
-        b.alias("__b"),
-        F.explode(F.sequence(win0, win1, F.lit(Fs))).alias("__w"),
-    )
-    ov = F.least(F.col("__b"), F.col("__w") + Fs - 1) - F.greatest(F.col("__a"), F.col("__w")) + 1
-    seg = seg.where(F.col("__slope") >= 0).withColumn("__ov", ov)
-    out = (
-        seg.groupBy("__k", "__w")
-        .agg(F.sum("__ov").alias("__cnt"), F.sum(F.col("__ov") * F.col("__slope")).alias("__sum"))
-        .where(F.col("__cnt") == Fs)
-        .select(
-            F.col("__k").alias(key),
-            F.timestamp_seconds(F.col("__w")).alias("start"),
-            F.col("__sum").alias(value),
-        )
-    )
-    return out
-
-
-def rollup_native_avg(
-    df: DataFrame,
-    key: str = "url",
-    ts_col: str = "warc_ts",
-    value: str = "value",
-    freq_seconds: int = 3600,
-    session_col: str | None = "session_id",
-) -> DataFrame:
-    """R2 closed form. Grid seconds [s1, s2) carry v1 + slope*(s-s1) (the
-    final knot contributes itself); window mean = sum/count over overlap,
-    emitted iff count == freq."""
-    knots = _knots(df, key, ts_col, value, session_col)
-    Fs = freq_seconds
-    # open segments [s1, s2-1]; terminal knot (s2 null) -> single second [s1, s1]
-    a = F.col("__s")
-    b = F.when(F.col("__s2").isNotNull(), F.col("__s2") - 1).otherwise(F.col("__s"))
-    slope = F.when(
-        F.col("__s2").isNotNull(),
-        (F.col("__v2") - F.col("__v")) / (F.col("__s2") - F.col("__s")),
-    ).otherwise(F.lit(0.0))
-    win0 = F.floor(a / Fs) * Fs
-    win1 = F.floor(b / Fs) * Fs
-    seg = knots.select(
-        "__k",
-        F.col("__s").alias("__s1"),
-        F.col("__v").alias("__v1"),
-        slope.alias("__slope"),
-        a.alias("__a"),
-        b.alias("__b"),
-        F.explode(F.sequence(win0, win1, F.lit(Fs))).alias("__w"),
-    )
-    lo = F.greatest(F.col("__a"), F.col("__w"))
-    hi = F.least(F.col("__b"), F.col("__w") + Fs - 1)
-    n = hi - lo + 1
-    # sum_{s=lo..hi} v1 + slope*(s - s1)  =  n*v1 + slope*(n*(lo+hi)/2 - n*s1)
-    mid = (lo + hi).cast("double") / 2.0
-    contrib = n.cast("double") * (F.col("__v1") + F.col("__slope") * (mid - F.col("__s1")))
-    seg = seg.withColumn("__n", n).withColumn("__contrib", contrib)
-    return (
-        seg.groupBy("__k", "__w")
-        .agg(F.sum("__n").alias("__cnt"), F.sum("__contrib").alias("__sum"))
-        .where(F.col("__cnt") == Fs)
-        .select(
-            F.col("__k").alias(key),
-            F.timestamp_seconds(F.col("__w")).alias("start"),
-            (F.col("__sum") / F.col("__cnt")).alias(value),
-        )
-    )
-
-
 def rollup_native_sum_avg(
     df: DataFrame,
     key: str = "url",
@@ -226,22 +134,30 @@ def rollup_native_sum_avg(
     session_col: str | None = "session_id",
     drop_neg: bool = True,
 ) -> DataFrame:
-    """r6 optimization: the SUM and AVG closed-form rollups in ONE pass
-    over a frame whose aggregation function is declared per series
-    (``agg_col``, constant per key — the registry contract). The pipeline
-    previously filtered the cached ``prepared`` twice and re-sorted each
-    disjoint subset; this computes both with one knots window and one
-    merge aggregate, branching the segment arithmetic per row. The math is
-    rollup_native_sum / rollup_native_avg verbatim (see those docstrings):
-    per-branch rows, expressions and float operation order are identical,
-    so results match the separate operators bit-for-bit."""
+    """R1 (SUM) and R2 (AVG) closed form, in ONE pass over a frame whose
+    aggregation function is declared per series (``agg_col``, constant per
+    key — the registry contract): one knots window and one merge aggregate,
+    branching the segment arithmetic per row.
+
+    Each inter-knot segment (s1,v1)->(s2,v2) of the 1s-floored series
+    (mean on collisions) carries slope=(v2-v1)/(s2-s1) per second:
+
+    - SUM covers seconds (s1, s2]; each carries increment ``slope``.
+      Rows whose value decreased are dropped first (``drop_neg``; the
+      reference keeps only diffs >= 0), and negative-slope seconds are
+      *removed*, making their windows incomplete.
+    - AVG covers seconds [s1, s2), each carrying v1 + slope*(s-s1); a
+      terminal knot (no successor) counts as its own second. Window mean =
+      sum/count over the overlap.
+
+    A window is emitted iff its covered-second count == freq."""
     Fs = freq_seconds
     sess = F.col(session_col) if session_col else F.lit(0)
     df = df.where(F.col(value).isNotNull())
     if drop_neg:
         # R1 step 1, SUM rows only. Series are homogeneous in agg_col, so
-        # the lag over (key, session) sees exactly the rows the SUM-only
-        # operator's drop_negative_diffs saw.
+        # the lag over (key, session) sees exactly the rows that
+        # cleaning.drop_negative_diffs would see on the SUM series alone.
         keys = [key] + ([session_col] if session_col else [])
         wd = W.partitionBy(*keys).orderBy(ts_col)
         diff = F.col(value) - F.lag(value).over(wd)

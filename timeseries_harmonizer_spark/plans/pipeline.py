@@ -3,10 +3,12 @@
 scan -> extract -> dedup -> enrich (broadcast registry) -> unit convert ->
 sessionize -> clean -> rollup -> shape points -> write tier payloads.
 
-Stage boundaries are Catalyst's; the explicit knobs are the bucket-hash
-repartition before the per-series stages (the storage analog of the
-reference's ``bucket = (ts // TS_BUCKETS) % BUCKETS``, lib/__init__.py:140)
-and sessionization, which bounds per-group state for the Arrow stages.
+Stage boundaries are Catalyst's; the explicit knobs are the one url-hash
+exchange in ``prepare`` (its width follows ``spark.sql.shuffle.partitions``;
+every later per-series stage reuses that partitioning) and sessionization,
+which bounds per-group state for the Arrow stages. ``run_tier`` is the one
+composition of a tier run: the library, the benchmark and
+``jobs/run_tier.py`` all execute its plan.
 """
 
 from __future__ import annotations
@@ -22,7 +24,7 @@ from timeseries_harmonizer_spark.config import (
 )
 from timeseries_harmonizer_spark.functions.extract import extract_text
 from timeseries_harmonizer_spark.operators.cleaning import unit_convert
-from timeseries_harmonizer_spark.operators.dedup import keep_last, keep_last_sorted
+from timeseries_harmonizer_spark.operators.dedup import keep_last_sorted
 from timeseries_harmonizer_spark.operators.rollup import (
     continuous_aggregate,
     rollup_exact_chunked,
@@ -32,18 +34,7 @@ from timeseries_harmonizer_spark.operators.rollup import (
 from timeseries_harmonizer_spark.operators.sessionize import sessionize
 
 
-def bucket_repartition(df: DataFrame, key: str = "url", n_buckets: int = N_BUCKETS) -> DataFrame:
-    """Explicit bucket-hash repartitioning: co-locates every row of a series
-    (and everything downstream keyed on it) in one shuffle."""
-    return df.repartition(n_buckets, F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)))
-
-
-def prepare(
-    pages: DataFrame,
-    registry: DataFrame,
-    tier: TierConfig,
-    use_extracted_text: bool = True,
-) -> DataFrame:
+def prepare(pages: DataFrame, registry: DataFrame, tier: TierConfig) -> DataFrame:
     """scan -> extract -> prune -> ONE shuffle -> dedup -> enrich ->
     convert -> sessionize.
 
@@ -56,9 +47,7 @@ def prepare(
     partitioning via the subset rule — zero additional exchanges through
     rollup and payload aggregation.
     """
-    df = pages
-    if use_extracted_text:
-        df = df.withColumn("text", extract_text(F.col("html")))
+    df = pages.withColumn("text", extract_text(F.col("html")))
     df = df.withColumn("value", F.length("text").cast("double"))
     df = df.select("url", "warc_ts", "ingest_pos", "value", "lang")
     # the one exchange. r6: its WIDTH follows the session's shuffle-partition
@@ -116,11 +105,8 @@ def rollup_points(
             session_col="session_id",
         )
         return sums.unionByName(avgs).unionByName(lasts)
-    # r6: SUM and AVG share one knots pass + merge aggregate instead of
-    # filtering (and re-sorting) the cached frame once per branch — the
-    # per-branch math in rollup_native_sum_avg is the separate operators'
-    # verbatim (equality pinned by test_sum_avg_combined_equals_separate
-    # and the oracle parity suite).
+    # SUM and AVG series share one knots pass + merge aggregate, so the
+    # cached frame is filtered and sorted once for both.
     sum_avgs = rollup_native_sum_avg(
         prepared.where(F.col("agg_func").isin("SUM", "AVG")),
         freq_seconds=tier.seconds,
@@ -171,15 +157,16 @@ def run_tier(
     registry: DataFrame,
     tier_name: str = "1h",
     exact: bool = False,
-    persist: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Full plan for one tier: returns (points, tier_payloads).
 
-    ``prepared`` feeds four consumers (SUM/AVG/LAST rollup branches +
-    payloads); persisting it turns 4 recomputations of
-    scan->extract->dedup->join->sessionize into one (the extract UDF and the
-    dedup shuffle are the expensive part — this is the analog of the
-    reference writing the cleaned series once per run)."""
+    ``prepared`` feeds three consumers (the SUM/AVG knots pass, the LAST
+    claim-span pass and the payloads); persisting it turns three
+    recomputations of scan->extract->dedup->join->sessionize into one (the
+    JVM extract over the html blobs and the dedup shuffle are the expensive
+    part — this is the analog of the reference writing the cleaned series
+    once per run). With ``exact=True`` the SUM and AVG branches read it
+    separately, so it has four consumers."""
     tier = TIERS[tier_name]
     if tier.calendar:
         raise ValueError(
@@ -199,8 +186,7 @@ def run_tier(
     prepared = prepared.select(
         "url", "warc_ts", "value", "lang", "agg_func", "session_id"
     )
-    if persist:
-        prepared = prepared.persist()
+    prepared = prepared.persist()
     pts = shape_points(rollup_points(prepared, tier, exact=exact), registry, tier)
     payloads = tier_payloads(prepared, tier)
     return pts, payloads

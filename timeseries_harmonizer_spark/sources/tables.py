@@ -212,9 +212,14 @@ class Catalog:
     def _stats_value(v):
         """JSON-able, ORDER-PRESERVING encoding of a parquet stat value:
         numbers pass through; timestamps/dates become ISO strings (which
-        compare lexicographically in timestamp order)."""
+        compare lexicographically in timestamp order). Timestamps are
+        encoded as naive UTC — parquet stats come back tz-aware, query
+        bounds usually naive (the session time zone is UTC) — so both sides
+        of the pruning compare carry no '+00:00' suffix."""
         import datetime
 
+        if isinstance(v, datetime.datetime) and v.tzinfo is not None:
+            v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
         if isinstance(v, (datetime.datetime, datetime.date)):
             return v.isoformat(sep=" ")
         if isinstance(v, (int, float, str)):
