@@ -1,13 +1,16 @@
 """Historic backfill driver — O6 analog (reference tools/historic_process.py).
 
 Chunks [start, stop] into per-tier lookback windows and runs one
-checkpointed tier job per chunk (chunk id = run id, so a killed backfill
-resumes at the first incomplete chunk). Re-processing overlap is safe:
-points appends dedup last-write-wins on read (D3/D4 semantics).
+checkpointed tier job per chunk over ``--input``: the chunk starting at
+``c`` reads the input's lookback window ending at ``min(c + lookback, stop)``
+(chunk id = run id, so a killed backfill resumes at the first incomplete
+chunk). Re-processing overlap is safe: points appends dedup last-write-wins
+on read (D3/D4 semantics).
 
 Usage:
   spark-submit --py-files timeseries_harmonizer_spark.zip jobs/backfill.py \
-      --tier 1h --warehouse /path/wh --start 2024-01-01 --stop 2024-03-01
+      --tier 1h --warehouse /path/wh --input /path/web_pages.parquet \
+      [--registry /path/registry.parquet] --start 2024-01-01 --stop 2024-03-01
 """
 
 from __future__ import annotations
@@ -28,10 +31,12 @@ def main(argv=None):
     ap = argparse.ArgumentParser()
     ap.add_argument("--tier", default="1h", choices=list(TIERS))
     ap.add_argument("--warehouse", required=True)
+    ap.add_argument("--input", required=True,
+                    help="existing web_pages parquet/table")
+    ap.add_argument("--registry", default=None,
+                    help="existing registry parquet (default: derive from input)")
     ap.add_argument("--start", required=True)
     ap.add_argument("--stop", required=True)
-    ap.add_argument("--n-urls", type=int, default=100)
-    ap.add_argument("--points-per-url", type=int, default=300)
     ap.add_argument("--master", default=None)
     args = ap.parse_args(argv)
 
@@ -44,9 +49,11 @@ def main(argv=None):
         run_id = f"backfill-{args.tier}-{cur.isoformat()}"
         sub = [
             "--tier", args.tier, "--warehouse", args.warehouse,
-            "--run-id", run_id,
-            "--n-urls", str(args.n_urls), "--points-per-url", str(args.points_per_url),
+            "--run-id", run_id, "--input", args.input,
+            "--ts-end", min(cur + chunk, t1).isoformat(),
         ]
+        if args.registry:
+            sub += ["--registry", args.registry]
         if args.master:
             sub += ["--master", args.master]
         run_tier_main(sub)

@@ -16,6 +16,8 @@ parquet scan. Without ``--input`` the synthetic generator is used.
 
 Stages (each manifest-checkpointed; a re-run with the same run id skips
 committed stages): points -> payloads -> compressed blobs -> retention sweep.
+The manifest is ``<warehouse>/_manifest/``, one put-if-absent record file
+per (run id, tier, stage).
 Points and payloads are the two frames of ``pipeline.run_tier``, the same
 plan the library and the benchmark run.
 """
@@ -62,7 +64,7 @@ def main(argv=None):
 
     spark = get_spark(app_name=f"tier-{args.tier}", master=args.master)
     catalog = Catalog(args.warehouse)
-    manifest = Manifest(os.path.join(args.warehouse, "_manifest.json"))
+    manifest = Manifest(os.path.join(args.warehouse, "_manifest"))
     runner = StageRunner(manifest, args.run_id, args.tier)
     tier = TIERS[args.tier]
 
@@ -102,10 +104,10 @@ def main(argv=None):
             f"points_{tier.name}", pts.withColumn("snapshot_id", F.lit(snap_id)),
             mode="append", partition_by=["bucket"], watermark=wm, count_rows=True,
         )
-        return snap, None
+        return snap
 
     def stage_payloads():
-        return catalog.write(f"payloads_{tier.name}", pay, watermark=wm), None
+        return catalog.write(f"payloads_{tier.name}", pay, watermark=wm)
 
     def stage_compress():
         pts = last_write_wins(
@@ -113,7 +115,7 @@ def main(argv=None):
             keys=("url", "start"), write_order_col="snapshot_id",
         )
         blobs = compress_points(pts.select("url", "start", "value"), tier.name)
-        return catalog.write(f"blobs_{tier.name}", blobs, watermark=wm), None
+        return catalog.write(f"blobs_{tier.name}", blobs, watermark=wm)
 
     def stage_sweep():
         pts = last_write_wins(
@@ -125,7 +127,7 @@ def main(argv=None):
         )
         if TIERS[args.tier].coarser:
             catalog.write(f"points_{TIERS[args.tier].coarser}_from_sweep", coarse, mode="append", watermark=wm)
-        return catalog.write(f"points_{tier.name}_retained", retained, watermark=wm), None
+        return catalog.write(f"points_{tier.name}_retained", retained, watermark=wm)
 
     runner.run("points", stage_points, watermark=wm)
     runner.run("payloads", stage_payloads, watermark=wm)

@@ -1,5 +1,8 @@
 """Checkpoint resume, retention sweep, PV repair."""
 
+import multiprocessing as mp
+import os
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
@@ -7,11 +10,18 @@ from pyspark.sql import functions as F
 from timeseries_harmonizer_spark.functions import series_kernels as K
 from timeseries_harmonizer_spark.operators.postprocess import pv_postprocess
 from timeseries_harmonizer_spark.operators.retention import sweep_tier
-from timeseries_harmonizer_spark.plans.checkpoint import Manifest, StageRunner
+from timeseries_harmonizer_spark.plans.checkpoint import (
+    Manifest,
+    StageRecord,
+    StageRunner,
+)
+
+N_COMMITTERS = 6  # more processes than the 4 cores the suite targets
+RECORDS_EACH = 25
 
 
 def test_manifest_resume(tmp_path):
-    m = Manifest(str(tmp_path / "manifest.json"))
+    m = Manifest(str(tmp_path / "manifest"))
     calls = []
     r = StageRunner(m, "run1", "1h")
     r.run("points", lambda: (calls.append("a"), 1)[1])
@@ -28,6 +38,53 @@ def test_manifest_resume(tmp_path):
     assert recs[0].snapshot_id == 1
 
 
+def _commit_records(path, wid, barrier):
+    m = Manifest(path)
+    barrier.wait(timeout=60)  # overlap the commit loops despite staggered starts
+    for i in range(RECORDS_EACH):
+        m.commit(StageRecord(run_id=f"w{wid}", stage=f"s{i}", tier="1h",
+                             snapshot_id=i))
+
+
+def test_concurrent_manifest_commits_lose_nothing(tmp_path):
+    """N processes commit distinct records to one manifest (concurrent tier
+    runs on one warehouse): every record survives, and a second commit of
+    an existing (run, tier, stage) is refused, leaving the first intact."""
+    path = str(tmp_path / "manifest")
+    ctx = mp.get_context("spawn")  # no fork of the JVM-bridged test process
+    barrier = ctx.Barrier(N_COMMITTERS)
+    procs = [
+        ctx.Process(target=_commit_records, args=(path, w, barrier))
+        for w in range(N_COMMITTERS)
+    ]
+    for p in procs:
+        p.start()
+    for p in procs:
+        p.join(timeout=60)
+        assert p.exitcode == 0
+
+    m = Manifest(path)
+    recs = m.records()
+    total = N_COMMITTERS * RECORDS_EACH
+    assert len(recs) == total, f"lost {total - len(recs)} records"
+    assert {(r.run_id, r.stage) for r in recs} == {
+        (f"w{w}", f"s{i}") for w in range(N_COMMITTERS) for i in range(RECORDS_EACH)
+    }
+    assert all(r.snapshot_id == int(r.stage[1:]) for r in recs)
+
+    first = next(r for r in recs if (r.run_id, r.stage) == ("w0", "s0"))
+    assert m.commit(StageRecord(run_id="w0", stage="s0", tier="1h",
+                                snapshot_id=999)) is False
+    again = [r for r in m.records() if (r.run_id, r.stage) == ("w0", "s0")]
+    assert again == [first]
+
+    # a run id holding path syntax still names one file inside the manifest
+    n_files = len(os.listdir(path))
+    assert m.commit(StageRecord(run_id="../x/y", stage="points", tier="1h")) is True
+    assert len(os.listdir(path)) == n_files + 1
+    assert m.is_done("../x/y", "points", "1h")
+
+
 def test_run_tier_job_resumes(tmp_path):
     """Kill-between-stages simulation through the spark-submit entry."""
     from jobs.run_tier import main
@@ -36,7 +93,7 @@ def test_run_tier_job_resumes(tmp_path):
     args = ["--tier", "1h", "--warehouse", wh, "--run-id", "r1",
             "--n-urls", "6", "--points-per-url", "40", "--master", "local[2]"]
     main(args)
-    m = Manifest(wh + "/_manifest.json")
+    m = Manifest(wh + "/_manifest")
     recs1 = {x.stage for x in m.records()}
     assert recs1 == {"points", "payloads", "compress", "sweep"}
     # re-run same run-id: all stages skip -> no new snapshots
@@ -61,10 +118,34 @@ def test_run_tier_job_reads_input_table(tmp_path, spark, pages):
     wh = str(tmp_path / "wh")
     main(["--tier", "1h", "--warehouse", wh, "--run-id", "r-in",
           "--input", src, "--master", "local[2]"])
-    m = Manifest(wh + "/_manifest.json")
+    m = Manifest(wh + "/_manifest")
     assert {x.stage for x in m.records()} == {"points", "payloads", "compress", "sweep"}
     from timeseries_harmonizer_spark.sources.tables import Catalog
     assert Catalog(wh).snapshots("points_1h")  # points came from the on-disk table
+
+
+def test_backfill_reads_input_chunks(tmp_path, spark, pages):
+    """The backfill runs one tier job per lookback chunk over ``--input``,
+    each reading the window that ends at its chunk end: 2 chunks of the 1m
+    tier's 2-day lookback over [2024-01-01, 2024-01-05] give 2 run ids x 4
+    stages and two points snapshots watermarked at the chunk ends."""
+    from jobs.backfill import main
+    from timeseries_harmonizer_spark.sources.tables import Catalog
+
+    src = str(tmp_path / "pages_src")
+    pages.write.parquet(src)
+    wh = str(tmp_path / "wh")
+    main(["--tier", "1m", "--warehouse", wh, "--input", src,
+          "--start", "2024-01-01", "--stop", "2024-01-05", "--master", "local[2]"])
+    recs = Manifest(wh + "/_manifest").records()
+    run_ids = {"backfill-1m-2024-01-01T00:00:00", "backfill-1m-2024-01-03T00:00:00"}
+    assert {(r.run_id, r.stage) for r in recs} == {
+        (run_id, stage) for run_id in run_ids
+        for stage in ("points", "payloads", "compress", "sweep")
+    }
+    assert len(recs) == 8
+    snaps = Catalog(wh).snapshots("points_1m")
+    assert [s.watermark for s in snaps] == ["2024-01-03 00:00:00", "2024-01-05 00:00:00"]
 
 
 def test_diff_series_cli(tmp_path, spark, pages):

@@ -201,45 +201,6 @@ def test_streaming_sessionize_out_of_order_across_triggers(spark, tmp_path):
     assert r["n_points"] == 62 and r["value_sum"] == 64.0
 
 
-def test_streaming_compressed_sink_roundtrip(spark, tmp_path):
-    """Streaming aggregate -> Gorilla blob sink: decompressing the blobs
-    written by the stream reproduces the finalized windows the plain
-    streaming sink would have written (same codec/at-rest format as the
-    batch job)."""
-    from timeseries_harmonizer_spark.operators.compress import decompress_points
-    from timeseries_harmonizer_spark.streaming.rollup_stream import (
-        run_compressed_sink,
-    )
-
-    src = str(tmp_path / "src7")
-    plain = str(tmp_path / "plain7")
-    blobs = str(tmp_path / "blobs7")
-    idx = pd.date_range("2024-01-01 00:00", periods=600, freq="1min")
-    pdf = pd.DataFrame({"url": "u", "warc_ts": idx, "value": 1.0})
-    spark.createDataFrame(pdf).write.parquet(src)
-
-    def agg_stream():
-        return streaming_continuous_aggregate(
-            read_pages_stream(spark, src), watermark="0 seconds"
-        ).select("url", "start", F.col("len_sum").alias("value"))
-
-    run_available_now(agg_stream(), plain, str(tmp_path / "ck_a"))
-    run_compressed_sink(agg_stream(), blobs, str(tmp_path / "ck_b"), tier_name="1h")
-    got = (
-        decompress_points(spark.read.parquet(blobs))
-        .select("url", "start", "value")
-        .toPandas()
-        .sort_values("start")
-        .reset_index(drop=True)
-    )
-    exp = (
-        spark.read.parquet(plain).toPandas().sort_values("start").reset_index(drop=True)
-    )
-    assert len(got) == len(exp) >= 9
-    assert (got["start"].to_numpy() == exp["start"].to_numpy()).all()
-    assert (got["value"].to_numpy() == exp["value"].to_numpy()).all()
-
-
 def test_streaming_interval_join_matches_batch(spark, tmp_path):
     """Stream-stream time-bounded join == the batch interval_join pair set
     on the same drained input."""
@@ -341,7 +302,9 @@ def test_streaming_compressed_sink_through_catalog(spark, tmp_path):
     """The catalog-backed streaming sink: one overwrite_partitions snapshot
     per micro-batch (commit lineage), a simulated at-least-once REPLAY of a
     batch replaces its partition instead of duplicating rows, and the
-    decompressed blobs match the plain sink."""
+    decompressed blobs reproduce the finalized windows (start and value) of
+    the plain streaming sink — the same codec/at-rest format as the batch
+    job."""
     from timeseries_harmonizer_spark.operators.compress import decompress_points
     from timeseries_harmonizer_spark.sources.tables import Catalog
     from timeseries_harmonizer_spark.streaming.rollup_stream import (
@@ -379,6 +342,7 @@ def test_streaming_compressed_sink_through_catalog(spark, tmp_path):
         .sort_values("start").reset_index(drop=True)
     )
     assert len(got) == len(exp) >= 9
+    assert (got["start"].to_numpy() == exp["start"].to_numpy()).all()
     assert (got["value"].to_numpy() == exp["value"].to_numpy()).all()
 
     # simulate the at-least-once replay of a data-carrying batch: re-commit

@@ -31,10 +31,6 @@ class TierConfig:
                                  # instead of fixed floor(ts/seconds)
 
     @property
-    def interval(self) -> str:
-        return f"{self.seconds} seconds"
-
-    @property
     def freq(self) -> "int | str":
         """The frequency operators take: seconds, or 'P1W'/'P1M'."""
         if self.calendar == "week":

@@ -52,6 +52,30 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 
 
+def publish_once(path: str, payload) -> bool:
+    """Atomically create ``path`` holding ``payload`` as JSON iff it does
+    not exist yet; False if another writer published it first. The temp
+    file is fully written and fsynced before the ``os.link``, so the link
+    either materializes the complete file under ``path`` or fails with
+    EEXIST. This is the engine's one durable-write primitive (catalog
+    versions, checkpoint records); on an object store it is a conditional
+    PUT (If-None-Match: *)."""
+    d = os.path.dirname(path) or "."
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f".tmp-{uuid.uuid4().hex}")
+    with open(tmp, "w") as f:
+        json.dump(payload, f, indent=1)
+        f.flush()
+        os.fsync(f.fileno())
+    try:
+        os.link(tmp, path)
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
+
+
 class CommitConflict(RuntimeError):
     """A rewrite/compact staged its output against a snapshot that is no
     longer the table head (a concurrent commit landed first). The staged
@@ -132,27 +156,6 @@ class Catalog:
         return list(state["files"])
 
     # -- CAS commit --------------------------------------------------------
-    def _try_publish(self, name: str, version: int, state: dict) -> bool:
-        """Atomically publish ``state`` as version ``version`` iff no other
-        writer has. The temp file is fully written and closed before the
-        ``os.link`` — the link either materializes the complete file under
-        the version name or fails with EEXIST (the CAS losing branch). On
-        an object store this is a conditional PUT (If-None-Match: *)."""
-        d = self._meta_dir(name)
-        os.makedirs(d, exist_ok=True)
-        tmp = os.path.join(d, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(state, f, indent=1)
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, self._version_path(name, version))
-            return True
-        except FileExistsError:
-            return False
-        finally:
-            os.unlink(tmp)
-
     @staticmethod
     def _partition_key(relpath: str) -> tuple[str, ...]:
         """The ``col=val`` path components of a tracked file — the table's
@@ -202,7 +205,7 @@ class Catalog:
                 "files": files,
                 "stats": stats,
             }
-            if self._try_publish(snap.table, head_v + 1, new_state):
+            if publish_once(self._version_path(snap.table, head_v + 1), new_state):
                 return snap.snapshot_id
             # lost the CAS race — loop re-reads the new head and retries
             # (or raises CommitConflict above when a parent was pinned)
@@ -488,9 +491,6 @@ class Catalog:
         if not parts:
             raise FileNotFoundError(f"table {name} v{version} tracks no files")
         return reduce(lambda a, b: a.unionByName(b), parts)
-
-    def exists(self, name: str) -> bool:
-        return bool(self._versions(name))
 
     # -- maintenance -------------------------------------------------------
     def expire_snapshots(self, name: str, keep_last: int = 1) -> int:

@@ -18,16 +18,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
-def read_pages_stream(
-    spark: SparkSession, path: str, schema=None, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    reader = spark.readStream.format("parquet")
+def read_pages_stream(spark: SparkSession, path: str, schema=None) -> DataFrame:
     if schema is None:
         schema = spark.read.parquet(path).schema
-    reader = reader.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.load(path)
+    return spark.readStream.format("parquet").schema(schema).load(path)
 
 
 def streaming_continuous_aggregate(
@@ -250,52 +244,6 @@ def streaming_interval_join(
     return p.join(iv, cond)
 
 
-def run_compressed_sink(
-    points: DataFrame,
-    out_path: str,
-    checkpoint: str,
-    tier_name: str = "1h",
-    key: str = "url",
-    start_col: str = "start",
-    value: str = "value",
-) -> None:
-    """Stream finalized tier points into Gorilla/delta-of-delta compressed
-    payload blobs: each micro-batch runs the batch compress operator via
-    foreachBatch, so the streaming path lands the SAME at-rest payload
-    format as the batch job — one codec, one reader. Append-mode upstream
-    means only watermark-finalized windows ever reach a blob, so blobs
-    never need rewriting for late data.
-
-    foreachBatch is at-least-once (a crash between the data write and the
-    checkpoint commit replays the batch), so each batch lands under its own
-    ``batch_id=<id>`` partition with DYNAMIC overwrite: a replayed batch
-    overwrites its own partition instead of appending duplicate blob rows —
-    idempotent, hence effectively exactly-once at rest. Readers see an
-    extra ``batch_id`` partition column; ``decompress_points`` ignores it."""
-    from timeseries_harmonizer_spark.operators.compress import compress_points
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            compress_points(
-                batch_df, tier_name, key=key, start_col=start_col, value=value,
-                partitions=batch_df.sparkSession.sparkContext.defaultParallelism,
-            )
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_path)
-        )
-
-    q = (
-        points.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def run_compressed_sink_catalog(
     points: DataFrame,
     catalog,
@@ -306,16 +254,20 @@ def run_compressed_sink_catalog(
     start_col: str = "start",
     value: str = "value",
 ) -> None:
-    """:func:`run_compressed_sink` landing through the snapshot catalog:
-    each micro-batch CAS-commits one ``overwrite_partitions`` snapshot on
-    its ``batch_id`` partition, so a replayed batch (foreachBatch is
-    at-least-once) REPLACES its own partition's files in the manifest
-    instead of appending duplicates — idempotent at rest, and the stream
-    gains commit lineage: one snapshot per micro-batch, batch id in the
-    watermark field, time-travel to any prior batch boundary. This is the
-    streaming face of the Iceberg-style commit protocol in
-    ``sources/tables.py``; concurrent batch writers to the same table are
-    safe because partition overwrites merge on CAS retry."""
+    """Stream finalized tier points into Gorilla/delta-of-delta payload
+    blobs through the snapshot catalog: each micro-batch runs the batch
+    compress operator via foreachBatch, so streaming lands the SAME at-rest
+    format as the batch job — one codec, one reader. Append-mode upstream
+    means only watermark-finalized windows reach a blob, so blobs never
+    rewrite for late data.
+
+    foreachBatch is at-least-once (a crash between the data write and the
+    stream checkpoint replays the batch), so each micro-batch CAS-commits
+    one ``overwrite_partitions`` snapshot on its own ``batch_id``
+    partition: a replay REPLACES that partition's files instead of
+    appending duplicates — idempotent, hence effectively exactly-once at
+    rest — and the table gains one snapshot per micro-batch (batch id in
+    the watermark field). ``decompress_points`` ignores ``batch_id``."""
     from timeseries_harmonizer_spark.operators.compress import compress_points
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
