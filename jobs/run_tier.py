@@ -5,7 +5,7 @@ Usage:
       --tier 1h --warehouse /path/wh --run-id 2024-01-07T00 \
       [--input /path/web_pages.parquet [--registry /path/registry.parquet]
        [--ts-end 2024-01-07T00:00:00]] \
-      [--n-urls 200 --points-per-url 500] [--exact]
+      [--n-urls 200 --points-per-url 500]
 
 Input: ``--input`` points at an existing ``web_pages`` parquet/table and the
 run reads only the tier's lookback window ending at ``--ts-end`` (default:
@@ -58,7 +58,6 @@ def main(argv=None):
     ap.add_argument("--n-urls", type=int, default=100)
     ap.add_argument("--points-per-url", type=int, default=300)
     ap.add_argument("--seed", type=int, default=42)
-    ap.add_argument("--exact", action="store_true")
     ap.add_argument("--master", default=None)
     args = ap.parse_args(argv)
 
@@ -96,7 +95,7 @@ def main(argv=None):
         watermark = pages.agg(F.max("warc_ts")).first()[0]
     wm = str(watermark)
 
-    pts, pay = pipeline.run_tier(pages, reg, args.tier, exact=args.exact)
+    pts, pay = pipeline.run_tier(pages, reg, args.tier)
 
     def stage_points():
         snap_id = (catalog.last_snapshot_id(f"points_{tier.name}") or 0) + 1

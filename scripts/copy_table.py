@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from timeseries_harmonizer_spark.config import N_BUCKETS  # noqa: E402
+from timeseries_harmonizer_spark.config import bucket_of  # noqa: E402
 from timeseries_harmonizer_spark.session import get_spark  # noqa: E402
 from timeseries_harmonizer_spark.sources.tables import Catalog  # noqa: E402
 
@@ -45,10 +45,7 @@ def _selector(args, with_bucket: bool = False):
         # constant-foldable bucket predicate -> partition pruning on
         # bucket-partitioned tables (export/migrate read 1/N_BUCKETS of
         # files; delete reads everything anyway to rewrite the complement)
-        cond = cond & (
-            F.col("bucket")
-            == F.pmod(F.xxhash64(F.lit(args.url)), F.lit(N_BUCKETS)).cast("int")
-        )
+        cond = cond & (F.col("bucket") == bucket_of(F.lit(args.url)))
     if args.ts_ini:
         cond = cond & (F.col("start") >= F.lit(args.ts_ini).cast("timestamp"))
     if args.ts_end:
@@ -94,7 +91,7 @@ def main(argv=None) -> int:
         else None
     )
     # bucket pruning is OPT-IN: it is only correct when the table's bucket
-    # column is pmod(xxhash64(url), N_BUCKETS) (true for engine points
+    # column is config.bucket_of(url) (true for engine points
     # tables written by shape_points, NOT for arbitrary bucket columns —
     # a wrong assumption would silently select zero rows)
     sel_pruned = _selector(
@@ -124,10 +121,7 @@ def main(argv=None) -> int:
         ap.error("migrate requires --to-url")
     moved = df.where(sel_pruned).withColumn("url", F.lit(args.to_url))
     if "bucket" in moved.columns:
-        moved = moved.withColumn(
-            "bucket",
-            F.pmod(F.xxhash64(F.col("url")), F.lit(N_BUCKETS)).cast("int"),
-        )
+        moved = moved.withColumn("bucket", bucket_of(F.col("url")))
     if args.series_hash and "series_hash" in moved.columns:
         moved = moved.withColumn("series_hash", F.lit(args.series_hash))
     if "snapshot_id" in moved.columns:

@@ -66,16 +66,13 @@ def recompute(spark, args, tier) -> pd.DataFrame:
 
 
 def stored(spark, args, tier) -> pd.DataFrame:
-    from timeseries_harmonizer_spark.config import N_BUCKETS
+    from timeseries_harmonizer_spark.config import bucket_of
 
     pts = Catalog(args.warehouse).read(spark, f"points_{tier.name}")
     if "bucket" in pts.columns:
         # constant-foldable bucket predicate -> directory-level partition
         # pruning on bucket-partitioned tables (touch 1/N_BUCKETS of files)
-        pts = pts.where(
-            F.col("bucket")
-            == F.pmod(F.xxhash64(F.lit(args.url)), F.lit(N_BUCKETS)).cast("int")
-        )
+        pts = pts.where(F.col("bucket") == bucket_of(F.lit(args.url)))
     pts = last_write_wins(pts, keys=("url", "start"), write_order_col="snapshot_id")
     return (
         pts.where(F.col("url") == args.url)

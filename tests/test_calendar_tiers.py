@@ -224,16 +224,20 @@ def test_upsample_duplicate_start_tolerated(spark):
 
     days = pd.to_datetime(["2024-01-01", "2024-01-01", "2024-01-02"])
     pdf = pd.DataFrame({"url": "u", "start": days, "value": [24.0, 48.0, 96.0]})
-    sdf = spark.createDataFrame(pdf)
-    out = (
-        upsample(sdf, agg="sum", from_seconds=86400, to_seconds=3600)
-        .orderBy("start", "value").toPandas()
-    )
-    # first duplicate claims a single slot at its own start (24/1), second
-    # duplicate claims [01-01, 01-02) = 24 slots, last point a full day
-    assert len(out) == 1 + 24 + 24
-    dup_slot = out[out["value"] == 24.0]
-    assert len(dup_slot) == 1 and dup_slot["start"].iloc[0] == days[0]
-    jan1 = out[(out["start"] >= days[0]) & (out["start"] < days[2])]
-    np.testing.assert_allclose(sorted(jan1["value"].unique()), [2.0, 24.0])
-    np.testing.assert_allclose(out["value"].sum(), 24.0 + 48.0 + 96.0)
+    # the same rows in reversed order must give the same output: ties on
+    # start are broken by value, not by input order
+    for rows in (pdf, pdf.iloc[::-1]):
+        sdf = spark.createDataFrame(rows)
+        out = (
+            upsample(sdf, agg="sum", from_seconds=86400, to_seconds=3600)
+            .orderBy("start", "value").toPandas()
+        )
+        # first duplicate claims a single slot at its own start (24/1),
+        # second duplicate claims [01-01, 01-02) = 24 slots, last point a
+        # full day
+        assert len(out) == 1 + 24 + 24
+        dup_slot = out[out["value"] == 24.0]
+        assert len(dup_slot) == 1 and dup_slot["start"].iloc[0] == days[0]
+        jan1 = out[(out["start"] >= days[0]) & (out["start"] < days[2])]
+        np.testing.assert_allclose(sorted(jan1["value"].unique()), [2.0, 24.0])
+        np.testing.assert_allclose(out["value"].sum(), 24.0 + 48.0 + 96.0)

@@ -1,5 +1,5 @@
 """The BASELINE parity suite: Spark engine rollups (native closed form AND
-Arrow exact-replay) vs the pandas oracle, at every retention tier —
+the chunked Arrow exact replay) vs the pandas oracle, at every retention tier —
 values compared after the reference's round(5)
 (reference harmonizers/__init__.py:233)."""
 
@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 import oracle
 from timeseries_harmonizer_spark.config import TIERS
+from timeseries_harmonizer_spark.operators.rollup import rollup_exact_chunked
 from timeseries_harmonizer_spark.plans import pipeline
 
 
@@ -38,7 +39,7 @@ def _compare(got: pd.DataFrame, expected: pd.DataFrame, tol=2e-5):
 def test_native_rollup_matches_oracle(spark, pages, reg, inputs_pdf, tier_name):
     tier = TIERS[tier_name]
     prepared = pipeline.prepare(pages, reg, tier)
-    pts = pipeline.rollup_points(prepared, tier, exact=False)
+    pts = pipeline.rollup_points(prepared, tier)
     got = (
         pts.select("url", "start", F.round("value", 5).alias("value"))
         .toPandas()
@@ -50,33 +51,44 @@ def test_native_rollup_matches_oracle(spark, pages, reg, inputs_pdf, tier_name):
     _compare(got, expected)
 
 
-def test_exact_replay_matches_oracle(spark, pages, reg, inputs_pdf):
-    """The Arrow replay path (chunked: bounded group memory) matches the
-    oracle kernels; chunk-partial merging reorders float addition, so the
-    tolerance is ULP-level rather than 0."""
-    tier = TIERS["1h"]
-    prepared = pipeline.prepare(pages, reg, tier)
-    pts = pipeline.rollup_points(prepared, tier, exact=True)
-    got = pts.select("url", "start", F.round("value", 5).alias("value")).toPandas()
+def _exact_sum_avg(prepared, tier) -> pd.DataFrame:
+    """rollup_exact_chunked over the SUM and AVG series of ``prepared``."""
+    parts = [
+        rollup_exact_chunked(
+            prepared.where(F.col("agg_func") == agg),
+            agg_func=agg,
+            freq_seconds=tier.seconds,
+            session_col="session_id",
+        )
+        for agg in ("SUM", "AVG")
+    ]
+    pts = parts[0].unionByName(parts[1])
+    return pts.select("url", "start", F.round("value", 5).alias("value")).toPandas()
+
+
+def _oracle_sum_avg(inputs_pdf, tier) -> pd.DataFrame:
     pages_pdf, reg_pdf = inputs_pdf
     expected = oracle.harmonize_pages(pages_pdf, reg_pdf, tier.seconds, tier.gap_seconds)
-    _compare(got, expected, tol=1e-9)
+    sum_avg = reg_pdf.loc[reg_pdf["agg_func"].isin(["SUM", "AVG"]), "url"]
+    return expected[expected["url"].isin(sum_avg)]
+
+
+def test_exact_replay_matches_oracle(spark, pages, reg, inputs_pdf):
+    """The Arrow replay (chunked: bounded group memory) matches the oracle
+    kernels on the SUM and AVG series; chunk-partial merging reorders float
+    addition, so the tolerance is ULP-level rather than 0."""
+    tier = TIERS["1h"]
+    prepared = pipeline.prepare(pages, reg, tier)
+    _compare(_exact_sum_avg(prepared, tier), _oracle_sum_avg(inputs_pdf, tier), tol=1e-9)
 
 
 def test_exact_path_gapless_1d_tier(spark, pages, reg, inputs_pdf):
-    """The 1d tier has gap_seconds=None (one session per url) — the exact
-    path must still run with bounded Arrow groups (time chunking) and match
-    the oracle, and LAST windows must carry a real is_real flag."""
+    """The 1d tier has gap_seconds=None (one session per url) — the chunked
+    replay must still run with bounded Arrow groups (time chunking) and
+    match the oracle."""
     tier = TIERS["1d"]
     prepared = pipeline.prepare(pages, reg, tier)
-    pts = pipeline.rollup_points(prepared, tier, exact=True)
-    pdf = pts.select(
-        "url", "start", F.round("value", 5).alias("value"), "is_real"
-    ).toPandas()
-    pages_pdf, reg_pdf = inputs_pdf
-    expected = oracle.harmonize_pages(pages_pdf, reg_pdf, tier.seconds, tier.gap_seconds)
-    _compare(pdf[["url", "start", "value"]], expected, tol=1e-9)
-    assert pdf["is_real"].notna().all()
+    _compare(_exact_sum_avg(prepared, tier), _oracle_sum_avg(inputs_pdf, tier), tol=1e-9)
 
 
 def test_twa_matches_numpy_trapezoid(spark):

@@ -528,3 +528,13 @@ def test_connected_components_label_unconverged_raises(spark):
     out = D.connected_components_star(path, stats=stats)
     assert stats["converged"] is True
     assert out.agg(F.countDistinct("component")).first()[0] == 1
+
+
+def test_connected_components_label_converges_at_diameter(spark):
+    """A path of 4 nodes has diameter 3: 'label' mode with max_iter=3
+    changes labels in all three rounds and reaches the fixed point on the
+    third, so it must return the one component rather than raise."""
+    path = spark.createDataFrame([(0, 1), (1, 2), (2, 3)], ["id_a", "id_b"])
+    out = D.connected_components(path, algorithm="label", max_iter=3).toPandas()
+    assert sorted(out["id"]) == [0, 1, 2, 3]
+    assert set(out["component"]) == {0}

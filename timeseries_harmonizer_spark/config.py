@@ -1,18 +1,29 @@
-"""Retention-tier configuration.
+"""Retention tiers and the window vocabulary every operator shares.
 
 Analog of the reference's ``FREQ_CONFIG`` (reference launcher_v2.py:22-28):
 each tier binds a window width, a lookback window re-read on every run
-(the effective watermark), an overlap trimmed from the head of each run's
-output (reference harmonizers/__init__.py:387-388), a session gap threshold
-(7200 s for fine tiers, None for coarse — reference launcher_v2.py:23-27),
-and a retention horizon after which the tier's fine payloads are swept into
-the next-coarser tier.
+(the effective watermark), a session gap threshold (7200 s for fine tiers,
+None for coarse — reference launcher_v2.py:23-27), and a retention horizon
+after which the tier's fine payloads are swept into the next-coarser tier.
+
+A frequency ("freq") is a fixed width in seconds or a calendar name in
+``CALENDAR``. The helpers below are the one place that tells the two apart
+(the reference's ``isodate_floor``, lib2/calculate_formulas.py:11-17):
+the driver-side floor, the Spark window label, the ``sequence`` step and the
+comparable width. The retention sweep relies on the driver floor and the
+executor label agreeing.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 from datetime import timedelta
+
+import pandas as pd
+from pyspark.sql import Column, functions as F
+
+# calendar frequency -> its date_trunc unit
+CALENDAR = {"P1W": "week", "P1M": "month"}
 
 
 @dataclass(frozen=True)
@@ -23,21 +34,14 @@ class TierConfig:
                               # ordering/ratios only (reference
                               # lib2/calculate_formulas.py:20-24)
     lookback: timedelta       # days_to_gather analog: window re-read per run
-    overlap: timedelta        # head trim of each run's output (D4)
     gap_seconds: int | None   # session split threshold (R5); None = no split
     retention: timedelta | None  # sweep horizon; None = keep forever
     coarser: str | None       # tier this one downsamples into on expiry
-    calendar: str | None = None  # "week" | "month": date_trunc windows
-                                 # instead of fixed floor(ts/seconds)
 
     @property
     def freq(self) -> "int | str":
-        """The frequency operators take: seconds, or 'P1W'/'P1M'."""
-        if self.calendar == "week":
-            return "P1W"
-        if self.calendar == "month":
-            return "P1M"
-        return self.seconds
+        """The frequency operators take: seconds, or a ``CALENDAR`` name."""
+        return self.name if self.name in CALENDAR else self.seconds
 
 
 TIERS: dict[str, TierConfig] = {
@@ -45,7 +49,6 @@ TIERS: dict[str, TierConfig] = {
         name="1m",
         seconds=60,
         lookback=timedelta(days=2),
-        overlap=timedelta(hours=1),
         gap_seconds=7200,
         retention=timedelta(days=7),
         coarser="1h",
@@ -54,7 +57,6 @@ TIERS: dict[str, TierConfig] = {
         name="1h",
         seconds=3600,
         lookback=timedelta(days=7),
-        overlap=timedelta(days=1),
         gap_seconds=7200,
         retention=timedelta(days=60),
         coarser="1d",
@@ -63,7 +65,6 @@ TIERS: dict[str, TierConfig] = {
         name="1d",
         seconds=86400,
         lookback=timedelta(days=60),
-        overlap=timedelta(days=2),
         gap_seconds=None,
         retention=timedelta(days=365),
         coarser="P1M",
@@ -78,43 +79,66 @@ TIERS: dict[str, TierConfig] = {
         name="P1W",
         seconds=7 * 86400,
         lookback=timedelta(days=60),
-        overlap=timedelta(days=0),
         gap_seconds=None,
         retention=None,
         coarser=None,
-        calendar="week",
     ),
     "P1M": TierConfig(
         name="P1M",
         seconds=30 * 86400,
         lookback=timedelta(days=180),
-        overlap=timedelta(days=0),
         gap_seconds=None,
         retention=None,
         coarser=None,
-        calendar="month",
     ),
 }
-
-# Aggregation functions a series can declare (reference
-# lib2/calculate_formulas.py:43-47 maps aggregationFunction -> {SUM: sum,
-# AVG: mean, LAST: last}).
-AGG_FUNCS = ("SUM", "AVG", "LAST")
 
 # Number of hash buckets for explicit bucket repartitioning (the storage
 # analog is the reference's bucket = (ts // TS_BUCKETS) % BUCKETS,
 # lib/__init__.py:140).
 N_BUCKETS = 64
 
-# Hot-series skew guard for the exact (Arrow) path: groups are split by
-# time into chunks of EXACT_CHUNK_WINDOWS tier windows with a one-point
-# overlap, then partial-merged (operators.rollup.rollup_exact_chunked) — a
-# deterministic salting of the group key by time. The native closed-form
-# path needs no salting: its aggregates are algebraic and combine map-side
-# (§4 of SURVEY.md — the reference has no skew handling; a huge device just
-# made one pod slow).
-EXACT_CHUNK_WINDOWS = 24
-
 # Values are rounded to 5 decimals before emit (reference
 # harmonizers/__init__.py:233).
 VALUE_ROUND = 5
+
+
+def bucket_of(col: Column) -> Column:
+    """The storage bucket id of a series key: every writer and every
+    bucket-pruning reader computes it here."""
+    return F.pmod(F.xxhash64(col), F.lit(N_BUCKETS)).cast("int")
+
+
+def freq_seconds(freq: "int | str") -> int:
+    """Comparable width in seconds (reference :20-24 — P1M compares as 30
+    days, P1W as 7)."""
+    return TIERS[freq].seconds if freq in CALENDAR else int(freq)
+
+
+def floor_time(ts, freq: "int | str") -> pd.Timestamp:
+    """Driver-side floor of a timestamp to the start of its window: Monday
+    / first of the month for calendar frequencies, else the epoch-aligned
+    fixed-width window. Agrees with :func:`window_start`."""
+    ts = pd.Timestamp(ts)
+    unit = CALENDAR.get(freq)
+    if unit == "month":
+        return ts.normalize().replace(day=1)
+    if unit == "week":
+        return (ts - pd.Timedelta(days=ts.weekday())).normalize()
+    return ts.floor(pd.Timedelta(seconds=int(freq)))
+
+
+def window_start(col: Column, freq: "int | str") -> Column:
+    """Spark-side window label (a timestamp) of a timestamp column."""
+    if freq in CALENDAR:
+        return F.date_trunc(CALENDAR[freq], col)
+    s = int(freq)
+    return F.timestamp_seconds(F.floor(F.unix_timestamp(col) / s) * s)
+
+
+def window_step(freq: "int | str") -> Column:
+    """The interval between consecutive window starts, for ``sequence``
+    over timestamps."""
+    if freq in CALENDAR:
+        return F.expr(f"interval 1 {CALENDAR[freq]}")
+    return F.expr(f"interval {int(freq)} seconds")

@@ -45,7 +45,11 @@ def shingles(df: DataFrame, text: str = "text", id_col: str = "doc_id", n: int =
     doc's shingles live in one array before the explode), so it is enforced
     with ``array_distinct`` map-side instead of a ``.distinct()`` — which
     planned a full (id, shingle) shuffle + two hash aggregates in every
-    consumer of this frame (q32's plan evaluates it six times)."""
+    consumer of this frame (q32's plan evaluates it six times).
+
+    Precondition: ``id_col`` is unique per row. Two rows with one id emit
+    the id's shingles twice, so the output is distinct only on deduped
+    input."""
     toks = F.split(normalized(F.col(text)), " ")
     idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
     sh = F.transform(
@@ -104,7 +108,11 @@ def boilerplate_segment_filter(
     Scale shape: one segment-hash aggregation (map-side combined, distinct
     per doc first so a doc can't inflate its own segment's df) + one
     equi-join back + one per-doc reassembly groupBy — all shuffle keys are
-    the segment hash or the doc id, never the text."""
+    the segment hash or the doc id, never the text.
+
+    Precondition: ``id_col`` is unique per row. Segments are made distinct
+    per row, not per id, so two rows with one id count twice towards a
+    segment's document frequency."""
     norm = normalized(F.col(text))
     toks = F.split(norm, " ")
     nseg = F.ceil(F.size(toks) / seg_words).cast("int")
@@ -466,7 +474,10 @@ def connected_components(
     diameter rounds."""
     if algorithm == "star":
         return connected_components_star(pairs, id_a, id_b)
-    switch_after = 4 if algorithm == "auto" else max_iter
+    # 'label' runs one confirming round past max_iter: a graph of diameter
+    # max_iter changes labels in every one of its max_iter rounds and is
+    # only seen to be converged by the round after.
+    n_rounds = min(4, max_iter) if algorithm == "auto" else max_iter + 1
     edges = (
         pairs.select(F.col(id_a).alias("s"), F.col(id_b).alias("d"))
         .unionByName(pairs.select(F.col(id_b).alias("s"), F.col(id_a).alias("d")))
@@ -479,7 +490,7 @@ def connected_components(
         .localCheckpoint()
     )
     converged = False
-    for i in range(min(switch_after, max_iter)):
+    for i in range(n_rounds):
         nbr = (
             edges.withColumnRenamed("s", "id")
             .join(labels, "id")

@@ -15,22 +15,14 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from timeseries_harmonizer_spark.config import TIERS, TierConfig
+from timeseries_harmonizer_spark.config import TIERS, TierConfig, floor_time
 from timeseries_harmonizer_spark.operators.rollup import downsample
 
 
 def floor_to_coarse_window(ts: pd.Timestamp, coarse: TierConfig) -> pd.Timestamp:
     """Floor a timestamp to the start of the coarse tier's window containing
-    it (calendar month/week like date_trunc, else the epoch-aligned
-    fixed-width window)."""
-    ts = pd.Timestamp(ts)
-    if coarse.calendar == "month":
-        return ts.normalize().replace(day=1)
-    if coarse.calendar == "week":
-        return (ts - pd.Timedelta(days=ts.weekday())).normalize()  # Monday
-    return pd.Timestamp(
-        (int(ts.timestamp()) // coarse.seconds) * coarse.seconds, unit="s"
-    )
+    it — the same boundary the executors' ``window_start`` labels use."""
+    return floor_time(ts, coarse.freq)
 
 
 def split_expired(
@@ -102,7 +94,7 @@ def sweep_tier(
                 key=key,
                 agg=agg,
                 from_seconds=tier.seconds,
-                to_seconds=coarse.freq,  # 'P1W'/'P1M' -> calendar windows
+                to_seconds=coarse.freq,
             ).withColumn("tier", F.lit(coarse.name))
         )
     coarse_points = parts[0].unionByName(parts[1]).unionByName(parts[2])

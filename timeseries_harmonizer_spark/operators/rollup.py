@@ -18,13 +18,15 @@ Two implementations of the reference's ``harmonize_irregular_data``
    merges. SUM and AVG series share this one knots pass and one merge
    aggregate. Mathematically identical to the replay; floating-point
    addition order differs, so parity tests compare post-round(5).
-   ``rollup_exact_chunked`` is the replay with bounded Arrow groups (the
-   pipeline's exact path).
+   ``rollup_exact_chunked`` is the replay with bounded Arrow groups.
 
 LAST (R3) is fully native: a tumbling max_by per window, then each observed
 window claims every slot up to the next observed one, filled with the
-running last non-null value (LOCF), in one window pass and a chunk-bounded
-explode (``rollup_native_last``).
+running last non-null value (LOCF), in one window pass and an explode
+(``rollup_native_last``) — for fixed and calendar frequencies alike.
+
+Window labels, steps and the fixed-vs-calendar rule come from
+``timeseries_harmonizer_spark.config``.
 
 Also here: R6 downsample (tier -> coarser tier), R7 upsample (ffill +
 sum-splitting), R8 dense reindex, and the north-star continuous aggregates
@@ -36,27 +38,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F
 
+from timeseries_harmonizer_spark.config import CALENDAR, window_start, window_step
 from timeseries_harmonizer_spark.functions import series_kernels as K
-
-
-def _window_col(ts_seconds_or_col, freq: int | str, is_ts: bool = False):
-    """Tumbling-window label for fixed (floor(ts/s)*s, long seconds) or
-    calendar ('P1W'/'P1M' -> date_trunc, timestamp) frequencies. Calendar
-    floors match the reference's isodate_floor
-    (reference lib2/calculate_formulas.py:11-17)."""
-    if freq == "P1M":
-        c = ts_seconds_or_col if is_ts else F.timestamp_seconds(ts_seconds_or_col)
-        return F.date_trunc("month", c)
-    if freq == "P1W":
-        c = ts_seconds_or_col if is_ts else F.timestamp_seconds(ts_seconds_or_col)
-        return F.date_trunc("week", c)
-    s = int(freq)
-    sec = F.unix_timestamp(ts_seconds_or_col) if is_ts else ts_seconds_or_col
-    return F.floor(sec / s) * s
-
-
-def _calendar_interval(freq: str) -> str:
-    return "interval 1 month" if freq == "P1M" else "interval 1 week"
 
 
 # ---------------------------------------------------------------------------
@@ -300,64 +283,40 @@ def rollup_native_last(
     observation (false -> LOCF-filled), the reference's isReal flag
     (reference lib/__init__.py:157-166).
 
-    freq_seconds: window width in seconds, or 'P1W'/'P1M' for calendar
-    windows (date_trunc labels, interval-stepped dense grid).
+    freq_seconds: window width in seconds, or a ``config.CALENDAR`` name
+    for calendar windows (date_trunc labels, interval-stepped slots).
+
+    Claim-span formulation: each observed window CLAIMS every grid slot up
+    to (exclusive) the next observed window, filled with the running last
+    non-null value at the claimant — the same derivation as ``upsample``'s
+    ffill. One window pass computes both the carry (last non-null __last so
+    far) and the claim end (lead(__w) - step); an explode emits the slots.
 
     Volume bound (the 100x argument): tiers with ``gap_check=None`` (1d)
     have unbounded sessions, so one url with years of sparse history would
-    otherwise explode its whole span as ONE generator batch. Integer-
-    frequency grids therefore bound every ``sequence``/explode batch at
-    ``chunk_windows`` windows (~35 days at 1m, ~5.7 years at 1h) via a
-    two-level explode over each observed window's claim span (see the
-    claim-span comment in the body). Calendar grids (P1W/P1M) keep the
-    direct span grid: decades are only hundreds of windows."""
-    calendar = isinstance(freq_seconds, str)
+    otherwise explode its whole span as ONE generator batch. Fixed-width
+    grids therefore bound every ``sequence``/explode batch at
+    ``chunk_windows`` windows (~35 days at 1m, ~5.7 years at 1h) with a
+    two-level explode: the outer sequence steps in chunk spans (gap/span
+    rows), the inner in windows (<= chunk_windows rows). Calendar claims
+    explode in one ``sequence``: decades are only hundreds of windows."""
+    calendar = freq_seconds in CALENDAR
+    if calendar:
+        step = window_step(freq_seconds)
+        win = window_start(F.col(ts_col), freq_seconds)
+    else:
+        # fixed widths keep long epoch-second labels for the chunk arithmetic
+        step = int(freq_seconds)
+        win = F.floor(F.unix_timestamp(F.col(ts_col)) / step) * step
     sess = F.col(session_col) if session_col else F.lit(0)
-    win = _window_col(F.col(ts_col), freq_seconds, is_ts=True).alias("__w")
     per_win = (
-        df.select(F.col(key).alias("__k"), sess.alias("__sess"), win, ts_col, value)
+        df.select(F.col(key).alias("__k"), sess.alias("__sess"), win.alias("__w"), ts_col, value)
         .groupBy("__k", "__sess", "__w")
         .agg(
             F.expr(f"max_by({value}, {ts_col}) FILTER (WHERE {value} IS NOT NULL)").alias("__last"),
             F.count(F.col(ts_col)).alias("__nraw"),
         )
     )
-    is_real = F.coalesce(F.col("__nraw") > 0, F.lit(False)).alias("is_real")
-    if calendar:
-        spans = per_win.groupBy("__k", "__sess").agg(
-            F.min("__w").alias("__w0"), F.max("__w").alias("__w1")
-        )
-        grid = spans.select(
-            "__k", "__sess",
-            F.explode(
-                F.sequence("__w0", "__w1", F.expr(_calendar_interval(freq_seconds)))
-            ).alias("__w"),
-        )
-        joined = grid.join(per_win, ["__k", "__sess", "__w"], "left")
-        w = (
-            W.partitionBy("__k", "__sess")
-            .orderBy("__w")
-            .rowsBetween(W.unboundedPreceding, 0)
-        )
-        return joined.select(
-            F.col("__k").alias(key),
-            F.col("__w").alias("start"),
-            F.last("__last", ignorenulls=True).over(w).alias(value),
-            is_real,
-        )
-    step = int(freq_seconds)
-    span_s = int(chunk_windows) * step  # explode-batch bound, in seconds
-    # r6 optimization (claim-span formulation): the dense grid + LEFT JOIN
-    # + per-chunk LOCF + carry-in machinery is equivalent to each observed
-    # window CLAIMING every grid slot up to (exclusive) the next observed
-    # window, filled with the running last non-null value at the claimant —
-    # the same derivation as `upsample`'s ffill. One window pass computes
-    # both the carry (last non-null __last so far) and the claim end
-    # (lead(__w) - step); a chunk-bounded double explode emits the slots.
-    # This removes the grid/per_win join, three groupBys and a second
-    # window sort from the old plan (plan: 2 exchanges fewer), while the
-    # per-row explode stays bounded: the outer sequence steps in chunk
-    # spans (gap/span rows), the inner in windows (<= chunk_windows rows).
     wspec = W.partitionBy("__k", "__sess").orderBy("__w")
     carry = F.last("__last", ignorenulls=True).over(
         wspec.rowsBetween(W.unboundedPreceding, 0)
@@ -370,18 +329,27 @@ def rollup_native_last(
         carry.alias("__fill"),
         F.coalesce(nxt - step, F.col("__w")).alias("__end"),  # inclusive
     )
-    sub = claims.select(
-        "__k", "__w", "__nraw", "__fill", "__end",
-        F.explode(F.sequence("__w", "__end", F.lit(span_s))).alias("__sub"),
-    )
-    slot_end = F.least(F.col("__end"), F.col("__sub") + F.lit(span_s - step))
-    slots = sub.select(
-        "__k", "__w", "__nraw", "__fill",
-        F.explode(F.sequence(F.col("__sub"), slot_end, F.lit(step))).alias("__slot"),
-    )
+    if calendar:
+        slots = claims.select(
+            "__k", "__w", "__nraw", "__fill",
+            F.explode(F.sequence("__w", "__end", step)).alias("__slot"),
+        )
+        start = F.col("__slot")
+    else:
+        span_s = int(chunk_windows) * step  # explode-batch bound, in seconds
+        sub = claims.select(
+            "__k", "__w", "__nraw", "__fill", "__end",
+            F.explode(F.sequence("__w", "__end", F.lit(span_s))).alias("__sub"),
+        )
+        slot_end = F.least(F.col("__end"), F.col("__sub") + F.lit(span_s - step))
+        slots = sub.select(
+            "__k", "__w", "__nraw", "__fill",
+            F.explode(F.sequence(F.col("__sub"), slot_end, F.lit(step))).alias("__slot"),
+        )
+        start = F.timestamp_seconds(F.col("__slot"))
     return slots.select(
         F.col("__k").alias(key),
-        F.timestamp_seconds(F.col("__slot")).alias("start"),
+        start.alias("start"),
         F.col("__fill").alias(value),
         ((F.col("__slot") == F.col("__w")) & F.coalesce(F.col("__nraw") > 0, F.lit(False))).alias(
             "is_real"
@@ -411,14 +379,12 @@ def downsample(
     the same series, instead of one downsample-plus-join per measure —
     guide §2.3 'aggregate before you shuffle').
 
-    to_seconds: target width in seconds, or 'P1W'/'P1M' for calendar windows
-    (date_trunc labels — the reference's '1MS' resample analog,
-    lib2/calculate_formulas.py:28-31)."""
-    calendar = isinstance(to_seconds, str)
-    if not calendar:
-        assert to_seconds % from_seconds == 0
+    to_seconds: target width in seconds, or a ``config.CALENDAR`` name for
+    calendar windows (date_trunc labels — the reference's '1MS' resample
+    analog, lib2/calculate_formulas.py:28-31)."""
+    assert to_seconds in CALENDAR or to_seconds % from_seconds == 0
     values = [value] if isinstance(value, str) else list(value)
-    win = _window_col(F.col(start_col), to_seconds, is_ts=True).alias("__w")
+    win = window_start(F.col(start_col), to_seconds).alias("__w")
     if agg == "sum":
         aggs = [F.sum(v).alias(v) for v in values]
     elif agg == "avg":
@@ -434,8 +400,7 @@ def downsample(
     if agg == "last":
         sel.append(F.unix_timestamp(F.col(start_col)).alias("__s"))
     out = points.select(*sel).groupBy("__k", "__w").agg(*aggs)
-    start = F.col("__w") if calendar else F.timestamp_seconds(F.col("__w"))
-    return out.select(F.col("__k").alias(key), start.alias(start_col), *values)
+    return out.select(F.col("__k").alias(key), F.col("__w").alias(start_col), *values)
 
 
 def upsample(
@@ -457,19 +422,22 @@ def upsample(
     window ([ts, ts+from_seconds)), matching the tier contract that a coarse
     point describes its whole window.
 
+    Duplicate (key, start) inputs are tolerated: ties order by value, so
+    the smaller duplicate claims only its own slot and the larger one the
+    span to the next point; the output then holds duplicate (key, start)
+    rows. The tie-break is deterministic whatever the input order.
+
     Plan shape: one hash exchange on the series key (the lead window), then
     a slot explode — identical to the formula engine's `_upsample`
     (plans/formula.py), which this operator mirrors; no range join, no
     BroadcastNestedLoopJoin."""
-    from pyspark.sql import Window as W
-
     assert from_seconds % to_seconds == 0
     src = points.select(
         F.col(key).alias("__k"),
         F.unix_timestamp(F.col(start_col)).alias("__s"),
         F.col(value).alias("__v"),
     )
-    nxt = F.lead("__s").over(W.partitionBy("__k").orderBy("__s"))
+    nxt = F.lead("__s").over(W.partitionBy("__k").orderBy("__s", "__v"))
     # exclusive claim end, clamped to at least one fine slot: a duplicate
     # (key, start) in the input makes lead(__s) == __s, which would send
     # F.sequence a negative span (runtime error) and n_slots to 0 (division
@@ -605,6 +573,16 @@ def rollup_exact_chunked(
     per-window (count, sum) partials; a native merge re-gates completeness
     (count == freq) after summation — bit-identical results, bounded memory:
     a chunk's 1s grid never exceeds chunk_windows * freq seconds (+gap).
+
+    Hot-series skew guard: chunking is a deterministic salting of the group
+    key by time. It bounds Arrow group memory even for gapless series — the
+    1d tier has gap_seconds=None, so without chunking one hot url would
+    materialize its entire history as a single 1s grid (the reference's
+    memory hazard at lib2/__init__.py:30). The default of 24 windows keeps a
+    1h chunk at one day of seconds. The native closed-form operators need no
+    salting: their aggregates are algebraic and combine map-side (§4 of
+    SURVEY.md — the reference has no skew handling; a huge device just made
+    one pod slow).
 
     Negative-diff dropping (R1 step 1) runs as a native window op BEFORE
     chunking, because a dropped row changes its neighbors' interpolation —

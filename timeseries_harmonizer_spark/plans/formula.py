@@ -46,6 +46,14 @@ from datetime import timedelta
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
 
+from timeseries_harmonizer_spark.config import (
+    CALENDAR,
+    floor_time,
+    freq_seconds,
+    window_start,
+    window_step,
+)
+
 # v2 constants (reference lib2/calculate_formulas.py:40-42). The v1 set in
 # launcher.py/lib/__init__.py:7-9 differs; v2 is the live pipeline.
 KPIS_FACTORS = {"HOUSE_FACTOR": 8.76, "CO2_FACTOR": 0.00009, "TREES_FACTOR": 0.0022}
@@ -61,42 +69,12 @@ class SeriesRef:
     agg_func: str          # SUM | AVG | LAST
 
 
-def comparable_seconds(freq: int | str) -> float:
-    """reference :20-24 — P1M compares as 30 days."""
-    if freq == "P1M":
-        return 30 * 86400.0
-    if freq == "P1W":
-        return 7 * 86400.0
-    return float(freq)
-
-
-def floor_ts(ts: pd.Timestamp, freq: int | str) -> pd.Timestamp:
-    """reference isodate_floor (:11-17)."""
-    ts = pd.Timestamp(ts)
-    if freq == "P1M":
-        return ts.replace(day=1, hour=0, minute=0, second=0, microsecond=0)
-    if freq == "P1W":
-        return ts.replace(hour=0, minute=0, second=0, microsecond=0) - pd.DateOffset(
-            days=ts.weekday()
-        )
-    return ts.floor(pd.Timedelta(seconds=int(freq)))
-
-
-def _trunc_col(c: Column, freq: int | str) -> Column:
-    if freq == "P1M":
-        return F.date_trunc("month", c)
-    if freq == "P1W":
-        return F.date_trunc("week", c)
-    s = int(freq)
-    return F.timestamp_seconds(F.floor(F.unix_timestamp(c) / s) * s)
-
-
 def resolve_series(
     candidates: list[SeriesRef], target_freq: int | str
 ) -> SeriesRef | None:
     """F3 — nearest-frequency candidate selection: a device may store the
     same property at several frequencies; try them ordered by
-    |comparable_freq(candidate) - comparable_freq(target)| ascending and
+    |freq_seconds(candidate) - freq_seconds(target)| ascending and
     take the first non-empty one (reference lib2/calculate_formulas.py:
     163-176, sorted hash_list + `if tmp.empty: continue`). Returns None when
     every candidate is empty — the reference emits an all-NaN series; the
@@ -106,7 +84,7 @@ def resolve_series(
     (LIMIT-1 plan); the reference pays a full remote read per try."""
     ordered = sorted(
         candidates,
-        key=lambda r: abs(comparable_seconds(r.freq) - comparable_seconds(target_freq)),
+        key=lambda r: abs(freq_seconds(r.freq) - freq_seconds(target_freq)),
     )
     for ref in ordered:
         if not ref.df.isEmpty():
@@ -131,19 +109,14 @@ class FormulaEngine:
 
     # -- grid ---------------------------------------------------------------
     def _grid(self, ts_ini, ts_end, freq, keys_df: DataFrame | None = None) -> DataFrame:
-        t0 = floor_ts(ts_ini, freq)
-        t1 = floor_ts(ts_end, freq)
-        step = (
-            "interval 1 month" if freq == "P1M"
-            else "interval 1 week" if freq == "P1W"
-            else f"interval {int(freq)} seconds"
-        )
+        t0 = floor_time(ts_ini, freq)
+        t1 = floor_time(ts_end, freq)
         time_grid = self.spark.range(1).select(
             F.explode(
                 F.sequence(
                     F.lit(t0.to_pydatetime()).cast("timestamp"),
                     F.lit(t1.to_pydatetime()).cast("timestamp"),
-                    F.expr(step),
+                    window_step(freq),
                 )
             ).alias("start")
         )
@@ -168,11 +141,11 @@ class FormulaEngine:
         src = ref.df.select(
             *ks, F.col("start").alias("__src_ts"), F.round(F.col("value"), 5).alias("__v")
         )
-        target_s = comparable_seconds(freq)
-        source_s = comparable_seconds(ref.freq)
+        target_s = freq_seconds(freq)
+        source_s = freq_seconds(ref.freq)
         if target_s > source_s:
             # downsample with the series' aggregation function (R6)
-            win = _trunc_col(F.col("__src_ts"), freq).alias("start")
+            win = window_start(F.col("__src_ts"), freq).alias("start")
             g = src.groupBy(*ks, win)
             fn = OPERATION_MAP[ref.agg_func]
             if fn == "sum":
@@ -183,13 +156,13 @@ class FormulaEngine:
                 lo, hi = f"__lo_{i}", f"__hi_{i}"
                 if ks:
                     span = src.groupBy(*ks).agg(
-                        _trunc_col(F.min("__src_ts"), freq).alias(lo),
-                        _trunc_col(F.max("__src_ts"), freq).alias(hi),
+                        window_start(F.min("__src_ts"), freq).alias(lo),
+                        window_start(F.max("__src_ts"), freq).alias(hi),
                     )
                 else:
                     span = src.agg(
-                        _trunc_col(F.min("__src_ts"), freq).alias(lo),
-                        _trunc_col(F.max("__src_ts"), freq).alias(hi),
+                        window_start(F.min("__src_ts"), freq).alias(lo),
+                        window_start(F.max("__src_ts"), freq).alias(hi),
                     )
 
                 def post(df, col):
@@ -222,7 +195,7 @@ class FormulaEngine:
         return (
             src.select(
                 *ks,
-                _trunc_col(F.col("__src_ts"), freq).alias("start"),
+                window_start(F.col("__src_ts"), freq).alias("start"),
                 F.col("__v").alias("value"),
             ),
             None,
@@ -238,7 +211,7 @@ class FormulaEngine:
         tiny inputs) keep the range join."""
         ks = self._keys
         on = ks + ["start"]
-        if freq in ("P1M", "P1W"):
+        if freq in CALENDAR:
             # calendar target: as-of-attach each grid slot to the latest
             # source point at or before it, via the union+LOCF asof_join
             # (one hash exchange + window — a raw `start >= __src_ts`
@@ -346,8 +319,8 @@ class FormulaEngine:
             else pd.Timestamp(ts_ini)
         )
         self._keys = keys
-        self._t0 = floor_ts(eval_ini, freq)
-        self._t1 = floor_ts(ts_end, freq)
+        self._t0 = floor_time(eval_ini, freq)
+        self._t1 = floor_time(ts_end, freq)
         grid = self._grid(eval_ini, ts_end, freq, keys_df)
         # every leaf aligns onto this same static grid — reuse it instead of
         # re-deriving it per leaf with a distinct() (one shuffle per leaf)
@@ -355,7 +328,7 @@ class FormulaEngine:
         self._leaf_i = 0
         df, col = self._compile(tree, grid, freq)
         out = df.select(*keys, "start", col.cast("double").alias("value"))
-        lo = floor_ts(ts_ini, freq).to_pydatetime()
+        lo = floor_time(ts_ini, freq).to_pydatetime()
         return out.where(F.col("start") >= F.lit(lo).cast("timestamp"))
 
     def _attach_leaf(
@@ -390,7 +363,7 @@ class FormulaEngine:
         ordered = sorted(
             cands,
             key=lambda r: abs(
-                comparable_seconds(r.freq) - comparable_seconds(freq)
+                freq_seconds(r.freq) - freq_seconds(freq)
             ),
         )
         flags = None

@@ -16,18 +16,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from timeseries_harmonizer_spark.config import (
-    EXACT_CHUNK_WINDOWS,
-    N_BUCKETS,
+    CALENDAR,
     TIERS,
     VALUE_ROUND,
     TierConfig,
+    bucket_of,
 )
 from timeseries_harmonizer_spark.functions.extract import extract_text
 from timeseries_harmonizer_spark.operators.cleaning import unit_convert
 from timeseries_harmonizer_spark.operators.dedup import keep_last_sorted
 from timeseries_harmonizer_spark.operators.rollup import (
     continuous_aggregate,
-    rollup_exact_chunked,
     rollup_native_last,
     rollup_native_sum_avg,
 )
@@ -54,8 +53,8 @@ def prepare(pages: DataFrame, registry: DataFrame, tier: TierConfig) -> DataFram
     # setting (scale-adaptive: SPARK_GRAFT_SHUFFLE/cluster profile) instead
     # of the storage constant N_BUCKETS — on the 32-core bench host 64-wide
     # stages ran every window in two half-empty task waves (~10% of the
-    # pass). The storage bucket ID (pmod(xxhash64(url), N_BUCKETS) in
-    # shape_points) is a data VALUE and keeps N_BUCKETS regardless.
+    # pass). The storage bucket ID (config.bucket_of in shape_points) is a
+    # data VALUE and keeps N_BUCKETS regardless.
     width = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     df = df.repartition(width, "url")
     df = keep_last_sorted(df, key="url", ts_col="warc_ts", order_col="ingest_pos")
@@ -68,43 +67,12 @@ def prepare(pages: DataFrame, registry: DataFrame, tier: TierConfig) -> DataFram
     return df
 
 
-def rollup_points(
-    prepared: DataFrame,
-    tier: TierConfig,
-    exact: bool = False,
-) -> DataFrame:
+def rollup_points(prepared: DataFrame, tier: TierConfig) -> DataFrame:
     """Per-series rollup at the tier frequency, honoring each series'
-    aggregation function; exact=True uses the reference-replay Arrow path,
-    else the closed-form native path (same semantics, see operators.rollup).
-
-    The exact path is always *chunked* (rollup_exact_chunked): Arrow group
-    memory is bounded by chunk span even for gapless series — the 1d tier has
-    gap_seconds=None, so without chunking one hot url would materialize its
-    entire history as a single 1s grid (the reference's memory hazard at
-    lib2/__init__.py:30). SUM/AVG windows that pass the completeness gate
-    always contain real observations -> is_real=True; LAST uses the native
-    operator, which derives is_real per window (LOCF fills are False)."""
-    if exact:
-        sums = rollup_exact_chunked(
-            prepared.where(F.col("agg_func") == "SUM"),
-            agg_func="SUM",
-            freq_seconds=tier.seconds,
-            session_col="session_id",
-            chunk_windows=EXACT_CHUNK_WINDOWS,
-        ).withColumn("is_real", F.lit(True))
-        avgs = rollup_exact_chunked(
-            prepared.where(F.col("agg_func") == "AVG"),
-            agg_func="AVG",
-            freq_seconds=tier.seconds,
-            session_col="session_id",
-            chunk_windows=EXACT_CHUNK_WINDOWS,
-        ).withColumn("is_real", F.lit(True))
-        lasts = rollup_native_last(
-            prepared.where(F.col("agg_func") == "LAST"),
-            freq_seconds=tier.seconds,
-            session_col="session_id",
-        )
-        return sums.unionByName(avgs).unionByName(lasts)
+    aggregation function, by the closed-form native operators (see
+    operators.rollup). SUM/AVG windows that pass the completeness gate
+    always contain real observations -> is_real=True; the LAST operator
+    derives is_real per window (LOCF fills are False)."""
     # SUM and AVG series share one knots pass + merge aggregate, so the
     # cached frame is filtered and sorted once for both.
     sum_avgs = rollup_native_sum_avg(
@@ -141,7 +109,7 @@ def shape_points(
         (F.col("start") + F.expr(f"INTERVAL {tier.seconds - 1} SECONDS")).alias("end"),
         F.round(F.col("value"), VALUE_ROUND).alias("value"),
         F.col("is_real"),
-        F.pmod(F.xxhash64(F.col("url")), F.lit(N_BUCKETS)).cast("int").alias("bucket"),
+        bucket_of(F.col("url")).alias("bucket"),
     )
 
 
@@ -156,7 +124,6 @@ def run_tier(
     pages: DataFrame,
     registry: DataFrame,
     tier_name: str = "1h",
-    exact: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Full plan for one tier: returns (points, tier_payloads).
 
@@ -165,10 +132,9 @@ def run_tier(
     recomputations of scan->extract->dedup->join->sessionize into one (the
     JVM extract over the html blobs and the dedup shuffle are the expensive
     part — this is the analog of the reference writing the cleaned series
-    once per run). With ``exact=True`` the SUM and AVG branches read it
-    separately, so it has four consumers."""
+    once per run)."""
     tier = TIERS[tier_name]
-    if tier.calendar:
+    if tier.name in CALENDAR:
         raise ValueError(
             f"tier {tier.name!r} has calendar windows: raw 1s-gated rollup is "
             "undefined for variable-length windows (the reference's "
@@ -187,7 +153,7 @@ def run_tier(
         "url", "warc_ts", "value", "lang", "agg_func", "session_id"
     )
     prepared = prepared.persist()
-    pts = shape_points(rollup_points(prepared, tier, exact=exact), registry, tier)
+    pts = shape_points(rollup_points(prepared, tier), registry, tier)
     payloads = tier_payloads(prepared, tier)
     return pts, payloads
 
